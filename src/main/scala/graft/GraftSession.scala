@@ -74,6 +74,20 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () } // non-log4j2 backend: nothing to pin
 
+  /** Run `body` with session confs set, restoring every one (or
+    * unsetting it, if it was unset) in a finally. Only confs read while
+    * `body` runs take effect: a query that needs them at optimization
+    * time must force its plan inside `body` (q255, q289). */
+  def withConfs[A](s: SparkSession, confs: Seq[(String, String)])(body: => A): A = {
+    val old = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Apply engine conf to an existing session (idempotent). */
   def prepare(spark: SparkSession): SparkSession = {
     quietRocksDbNativeLogger()
@@ -106,15 +120,16 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE coalesce partitions INSIDE persisted plans (round 18):
-      // every PlanCache entry is a small aggregated artifact (daily
-      // grids, pair tables, fitted coefficients) whose materialization
-      // otherwise pins the static shuffle partition count — profiled at
-      // 32 one-row tasks per downstream scan, dozens of 0.3-0.45 s
-      // subquery/broadcast jobs per causal query re-reading a ~300-row
-      // grid. Off by default only because cached-plan output
-      // partitioning becomes run-dependent, which nothing here relies
-      // on (guide §2.2: fewer, larger reduce partitions via AQE).
+      // Let AQE coalesce partitions INSIDE persisted plans (round 18).
+      // This conf governs only InMemoryRelation plans, i.e. the plain
+      // `.cache()`/`.persist()` sites: PlanCache entries are local
+      // checkpoints, which AQE plans like any other action, so their
+      // partitioning already comes out coalesced. Without it a cached
+      // small artifact pins the static shuffle partition count
+      // (profiled at 32 one-row tasks per downstream scan). Off by
+      // default only because cached-plan output partitioning becomes
+      // run-dependent, which nothing here relies on (guide §2.2: fewer,
+      // larger reduce partitions via AQE).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // With parallelismFirst (default), AQE's coalesce target is
       // max(totalSize/parallelism, minPartitionSize). The 1 MB default

@@ -38,30 +38,80 @@ object Scratch {
   }
 }
 
-/** Idempotent per-(session, key) persisted intermediates.
+/** Idempotent per-(session, key) materialized intermediates.
   *
   * Queries that cache a small derived table (the causal daily grid, a
-  * filtered purchase subset, an eval scoring pass) previously called
-  * `.cache()` on a FRESH DataFrame each invocation, so repeated
-  * verify/bench runs in one session accumulated duplicate cache entries
-  * that nothing ever unpersisted (round-7 ADVICE). Routing the persist
-  * through this registry makes it idempotent: the first invocation
-  * builds and persists, every later invocation in the same session
-  * reuses the SAME DataFrame (and therefore the same single cache
-  * entry) — bounded memory, and cross-query reuse for free when several
-  * queries share an intermediate. Entries are keyed by session identity
-  * so a stopped session's entries are simply dead references (their
-  * cached blocks die with the context); MEMORY_AND_DISK keeps the
-  * intermediate spillable rather than recompute-on-eviction.
+  * filtered purchase subset, an eval scoring pass) route it through this
+  * registry: the first invocation for a (session, key) materializes the
+  * build, every later invocation in the same session reuses the SAME
+  * frame — bounded memory, and cross-query reuse for free when several
+  * queries share an intermediate. Entries are keyed by session identity,
+  * so a stopped session's entries are dead references whose blocks die
+  * with the context.
+  *
+  * An entry keeps the ROWS, not the lineage. The build is materialized
+  * eagerly, at the `cached(...)` call, as a local checkpoint stored at
+  * MEMORY_AND_DISK; the entry holds the checkpointed frame, which
+  * carries the build's statistics, output partitioning and ordering.
+  * Nothing references the build's executed plan afterwards, so
+  * `ContextCleaner` frees its broadcast relations and shuffle
+  * dependencies. A persisted frame (`persist`) would instead keep the
+  * executed plan reachable through `InMemoryRelation.cachedPlan` for
+  * the session's lifetime — every broadcast hash relation under it pins
+  * a full Tungsten page on the driver (the q452 consensus build alone
+  * held ~17 × 32 MB pages for a few hundred rows).
+  *
+  * Trade-off: a local-checkpoint block has no lineage, so a LOST block
+  * fails the reading query instead of recomputing. The engine only
+  * runs `local[N]`, where the driver is the executor (no executor loss
+  * drops blocks), and MEMORY_AND_DISK spills under memory pressure
+  * rather than evicting.
+  *
+  * The map only holds per-key holders; the build job runs outside the
+  * map's bin lock, so concurrent readouts on other keys never serialize
+  * behind a build, and a build may itself resolve other entries. A
+  * build that throws leaves no entry behind.
   */
 object PlanCache {
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  import org.apache.spark.rdd.RDD
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.storage.StorageLevel
 
-  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    entries.computeIfAbsent(
-      s"${System.identityHashCode(s.sparkContext)}|$key",
-      _ => build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  /** One key's holder: the build thunk until first use, then the
+    * checkpointed frame and the RDD whose blocks back it. */
+  private final class Entry(private var build: () => DataFrame) {
+    @volatile private var frame: DataFrame = _
+    @volatile private var rdd: RDD[_] = _
+
+    def get: DataFrame = {
+      val f = frame
+      if (f != null) f else synchronized {
+        if (frame == null) {
+          val cp = build().localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK)
+          rdd = cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+            .getOrElse(sys.error("local checkpoint without a LogicalRDD"))
+          frame = cp
+          build = null // release whatever the thunk captured
+        }
+        frame
+      }
+    }
+
+    /** Unpersist the checkpoint's blocks (blocking), after any build in
+      * flight finishes. */
+    def release(): Unit = synchronized {
+      if (rdd != null) rdd.unpersist(blocking = true)
+    }
+  }
+
+  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+
+  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    val k = s"${System.identityHashCode(s.sparkContext)}|$key"
+    val e = entries.computeIfAbsent(k, _ => new Entry(() => build))
+    try e.get
+    catch { case t: Throwable => entries.remove(k, e); throw t }
+  }
 
   /** Snapshot of the current cache keys — used by Bench's retime rule. */
   def keys: Set[String] = {
@@ -69,16 +119,18 @@ object PlanCache {
     entries.keySet.asScala.toSet
   }
 
-  /** Drop (and unpersist) specific entries. Bench's retime rule calls
-    * this with the keys a query's FIRST timing created, so the second
-    * timing re-measures the same cold work instead of reading the first
-    * run's persisted subtree back out of the cache (round 12: q363's
-    * committed 0.301 s was exactly that artifact — t1 7.6 s built and
-    * persisted the fold-moment table, t2 0.3 s read it back, and
-    * min(t1, t2) buried the real cost for five rounds). Unpersist is
-    * blocking so the second timing cannot overlap the cleanup.
+  /** Drop specific entries and release their blocks. Bench's retime
+    * rule calls this with the keys a query's FIRST timing created, so
+    * the second timing re-measures the same cold work instead of
+    * reading the first run's materialized subtree back out of the cache
+    * (round 12: q363's committed 0.301 s was exactly that artifact — t1
+    * 7.6 s built and persisted the fold-moment table, t2 0.3 s read it
+    * back, and min(t1, t2) buried the real cost for five rounds).
+    * `unpersist` on the checkpointed FRAME is a no-op (it is not in the
+    * CacheManager), so the entry unpersists its backing RDD, blocking,
+    * so the second timing cannot overlap the cleanup.
     */
   def drop(ks: Set[String]): Unit = ks.foreach { k =>
-    Option(entries.remove(k)).foreach(_.unpersist(blocking = true))
+    Option(entries.remove(k)).foreach(_.release())
   }
 }

@@ -46,13 +46,15 @@ object CausalOps {
     * of accumulating fresh ones (round-7 ADVICE).
     */
   private[graft] def daily(s: SparkSession, d: String): DataFrame =
-    PlanCache.cached(s, s"causal_daily|$d") {
-      Tables.events(s, d)
-        .groupBy(col("event_type").as("el"),
-          datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
-        .agg((sum(col("value").cast("decimal(18,3)")).cast("double") /
-          count(lit(1))).as("v"))
-    }
+    PlanCache.cached(s, s"causal_daily|$d")(dailyBuild(s, d))
+
+  /** The uncached build behind [[daily]] — PlanSpec inspects its plan. */
+  private[graft] def dailyBuild(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type").as("el"),
+        datediff(col("ts").cast("date"), lit("2024-01-01").cast("date")).as("di"))
+      .agg((sum(col("value").cast("decimal(18,3)")).cast("double") /
+        count(lit(1))).as("v"))
 
   /** Hard ceiling for the FULL O(P²) pair-enumeration paths (q229/q230/
     * q246/q247/q248). Their pair joins are keyed on the low-cardinality

@@ -44,6 +44,25 @@ object Extensions {
     db
   }
 
+  /** The session confs q255 plans under. */
+  private[graft] val CboConfs = Seq(
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
+
+  /** q255's star join over the ANALYZE'd catalog tables, un-checkpointed:
+    * it takes CBO from whatever confs are set when it is optimized. */
+  private[graft] def cboStarJoinPlan(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
+    val db = cboTables(s, d)
+    s.sql(
+      s"""SELECT c_mktsegment, count(*) AS n_li,
+         |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,12))) AS DOUBLE), 2) AS revenue
+         |FROM $db.lineitem JOIN $db.orders ON l_orderkey = o_orderkey
+         |JOIN $db.customer ON o_custkey = c_custkey
+         |WHERE o_orderpriority = '1-URGENT'
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+  }
+
   /** Same deterministic logit/label as q20/q21 (Relational.scala).
     * CASTs keep both engines (and SigmoidCE's type check) in DoubleType
     * — bare 1.0 literals parse as DECIMAL in Spark SQL.
@@ -262,10 +281,11 @@ object Extensions {
       * the join strategy flips from sort-merge to broadcast-hash at a
       * threshold between the two estimates. At 100 TB that estimate is the difference between
       * shuffling a fact table and broadcasting a filtered dimension.
-      * CBO stays enabled for the session afterwards — it only affects
-      * catalog tables WITH stats, and every other query in the suite
-      * reads path-based parquet (no catalog stats), so their plans are
-      * unchanged by construction.
+      * Both CBO confs hold only while the plan is optimized: the plan is
+      * forced with localCheckpoint INSIDE the conf window (the q289
+      * pattern) and the confs are restored in a finally, so no later
+      * query in the session plans under them. PlanSpec inspects the
+      * un-checkpointed plan via [[cboStarJoinPlan]].
       */
     QueryDef(
       "q255_cbo_star_join",
@@ -275,16 +295,7 @@ object Extensions {
         |JOIN customer ON o_custkey = c_custkey
         |WHERE o_orderpriority = '1-URGENT'
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
-      val db = cboTables(s, d)
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.sql(
-        s"""SELECT c_mktsegment, count(*) AS n_li,
-           |  round(CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,12))) AS DOUBLE), 2) AS revenue
-           |FROM $db.lineitem JOIN $db.orders ON l_orderkey = o_orderkey
-           |JOIN $db.customer ON o_custkey = c_custkey
-           |WHERE o_orderpriority = '1-URGENT'
-           |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
+      graft.GraftSession.withConfs(s, CboConfs)(cboStarJoinPlan(s, d).localCheckpoint())
     },
 
     /** Salted skew join: the fact side keys are heavily skewed (5

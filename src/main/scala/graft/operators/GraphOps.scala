@@ -36,17 +36,19 @@ object GraphOps {
     * grouped count applies the ≥2 support floor. collect_set dedups, so
     * the explicit DISTINCT the op-form sites used is structural here. */
   private[operators] def coorderPairs(s: SparkSession, d: String): DataFrame =
-    graft.PlanCache.cached(s, s"coorder_paircnt|$d") {
-      Tables.lineitem(s, d)
-        .groupBy("l_orderkey")
-        .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(flatten(transform(col("ps"), (x, i) =>
-          transform(slice(col("ps"), i + 2, size(col("ps"))),
-            y => struct(x.as("u"), y.as("v")))))).as("pr"))
-        .select(col("pr.u").as("u"), col("pr.v").as("v"))
-        .groupBy("u", "v").agg(count(lit(1)).as("nco"))
-        .where(col("nco") >= 2)
-    }
+    graft.PlanCache.cached(s, s"coorder_paircnt|$d")(coorderPairsBuild(s, d))
+
+  /** The uncached build behind [[coorderPairs]] — PlanSpec inspects its plan. */
+  private[graft] def coorderPairsBuild(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d)
+      .groupBy("l_orderkey")
+      .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
+      .select(explode(flatten(transform(col("ps"), (x, i) =>
+        transform(slice(col("ps"), i + 2, size(col("ps"))),
+          y => struct(x.as("u"), y.as("v")))))).as("pr"))
+      .select(col("pr.u").as("u"), col("pr.v").as("v"))
+      .groupBy("u", "v").agg(count(lit(1)).as("nco"))
+      .where(col("nco") >= 2)
 
   /** The pair set without its support counts — the edge-set view. */
   private[operators] def coorderEdges(s: SparkSession, d: String): DataFrame =

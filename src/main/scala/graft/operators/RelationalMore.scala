@@ -560,19 +560,13 @@ object RelationalMore {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND o_orderstatus = 'F'
         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-      val confs = Seq(
+      graft.GraftSession.withConfs(s, Seq(
         "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-      val old = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try bloomJoinPlan(s, d).localCheckpoint()
-      finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"
+      ))(bloomJoinPlan(s, d).localCheckpoint())
     }
   )
 

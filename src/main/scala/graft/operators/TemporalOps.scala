@@ -363,15 +363,7 @@ object TemporalOps {
       // the offsets collect and the downstream aggregate share one
       // entry, and repeated bench/verify invocations reuse it instead
       // of accumulating copies (round-7 ADVICE).
-      val local = graft.PlanCache.cached(s, s"q174_local|$d") {
-        val parts = Tables.events(s, d)
-          .where(col("event_type") === "purchase")
-          .select(col("event_id"))
-          .repartitionByRange(32, col("event_id"))
-          .withColumn("pid", spark_partition_id())
-        val wIn = Window.partitionBy(col("pid")).orderBy(col("event_id"))
-        parts.withColumn("rn_local", row_number().over(wIn).cast("long"))
-      }
+      val local = graft.PlanCache.cached(s, s"q174_local|$d")(q174Local(s, d))
       val totals = local.groupBy("pid").agg(count(lit(1)).as("tot"))
         .orderBy("pid").collect()
       // phase 2: exclusive prefix offsets (O(partitions) on the driver)
@@ -683,6 +675,18 @@ object TemporalOps {
 
   /** Exclusive prefix offset of this row's range partition — the shared
     * two-phase idiom, now hoisted to [[TwoPhase.offsets]] (round 10). */
+  /** q174's phase 1, uncached: pid-local row numbers over a range
+    * partitioning of the purchase ids — PlanSpec inspects its plan. */
+  private[graft] def q174Local(s: SparkSession, d: String): DataFrame = {
+    val parts = Tables.events(s, d)
+      .where(col("event_type") === "purchase")
+      .select(col("event_id"))
+      .repartitionByRange(32, col("event_id"))
+      .withColumn("pid", spark_partition_id())
+    val wIn = Window.partitionBy(col("pid")).orderBy(col("event_id"))
+    parts.withColumn("rn_local", row_number().over(wIn).cast("long"))
+  }
+
   private def udfFreeOffsets(totals: Seq[(Int, Long)]): Column =
     TwoPhase.offsets(totals)
 }

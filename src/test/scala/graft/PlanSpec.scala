@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
@@ -32,7 +31,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  import PlanTestUtils.{allNodes, finalPlan}
+  import PlanTestUtils.{allNodes, cachedReads, finalPlan}
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     allNodes(p).collect { case s: FileSourceScanExec => s }
@@ -351,17 +350,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // windows over a range partitioning + a driver offset table — a
     // global ORDER BY window would funnel every purchase through one
     // task at scale
-    // phase 1 is materialized behind a cache by the offsets collect, so
-    // the window lives inside the InMemoryRelation's cached plan
-    def deep(p: SparkPlan): Seq[SparkPlan] = allNodes(p).flatMap {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s +: (s.relation.cachedPlan match {
-          case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-          case cp => deep(cp)
-        })
-      case other => Seq(other)
-    }
-    val nodes = deep(finalPlan(SparkEntry.queries("q174_id_islands")(spark, sf)))
+    // phase 1 is a PlanCache entry: q174 reads its checkpoint, so the
+    // window lives in the plan of the uncached build frame
+    val query = finalPlan(SparkEntry.queries("q174_id_islands")(spark, sf))
+    assert(cachedReads(query).nonEmpty, "q174 must read phase 1 from its PlanCache entry")
+    val nodes = allNodes(query) ++
+      allNodes(finalPlan(operators.TemporalOps.q174Local(spark, sf)))
     val windows = nodes.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.nonEmpty, "expected the pid-local window")
@@ -421,16 +415,13 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q233 changepoint windows are element-partitioned, never global") {
     // cusum + argmax both run per element over the O(P·T) grid; a
-    // single-partition window here would serialize the whole grid
-    def deep(p: SparkPlan): Seq[SparkPlan] = allNodes(p).flatMap {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s +: (s.relation.cachedPlan match {
-          case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-          case cp => deep(cp)
-        })
-      case other => Seq(other)
-    }
-    val nodes = deep(finalPlan(SparkEntry.queries("q233_cusum_changepoint")(spark, sf)))
+    // single-partition window here would serialize the whole grid.
+    // The grid is a PlanCache entry: q233 reads its checkpoint, and the
+    // grid's own build plan is checked alongside the query's
+    val query = finalPlan(SparkEntry.queries("q233_cusum_changepoint")(spark, sf))
+    assert(cachedReads(query).nonEmpty, "q233 must read the PlanCache'd daily grid")
+    val nodes = allNodes(query) ++
+      allNodes(finalPlan(operators.CausalOps.dailyBuild(spark, sf)))
     val windows = nodes.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w }
     assert(windows.nonEmpty, "expected the cusum/argmax windows")
@@ -526,6 +517,28 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
+  }
+
+  test("q255 plans under CBO and leaves both CBO confs as it found them") {
+    // the confs matter only while the plan is optimized, so q255 forces
+    // its plan inside the conf window and restores them in a finally;
+    // a leak would re-plan every later query in the session under CBO
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+    val cbo = operators.Extensions.CboConfs
+    def confs = cbo.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val before = confs
+    assert(SparkEntry.queries("q255_cbo_star_join")(spark, sf).collect().nonEmpty)
+    assert(confs === before, "q255 left its CBO confs changed in the session")
+    // the plan builder optimized under q255's confs sees CBO: the
+    // filtered orders side gets a rowCount/ndv estimate, which
+    // size-only planning never produces
+    def filterRows = operators.Extensions.cboStarJoinPlan(spark, sf)
+      .queryExecution.optimizedPlan.collect { case f: LFilter => f.stats.rowCount }
+    val underCbo = GraftSession.withConfs(spark, cbo)(filterRows)
+    assert(underCbo.nonEmpty && underCbo.forall(_.nonEmpty),
+      s"q255's plan under its confs has no CBO row estimate: $underCbo")
+    val without = GraftSession.withConfs(spark, cbo.map { case (k, _) => k -> "false" })(filterRows)
+    assert(without.forall(_.isEmpty), s"row estimate without CBO: $without")
   }
 
   test("q250 residual IVF-PQ is join-free and map-side: literal quantizers + one bounded heap") {
@@ -646,20 +659,23 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q285 builds co-order pairs from baskets: exactly one lineitem scan, no fact self-join") {
     // The co-order edge set is PlanCache'd (shared with q349/q331), so the
-    // lineitem scan may appear as an InMemoryTableScan instead of a parquet
-    // scan. Either way the fact table must not be self-joined: at most one
-    // direct scan, and if zero, the cached edge set must be what replaced it.
-    val nodes = allNodes(finalPlan(SparkEntry.queries("q285_adamic_adar")(spark, sf)))
-    val liScans = nodes.collect {
+    // lineitem scan may appear as a read of the entry's checkpoint instead
+    // of a parquet scan. Either way the fact table must not be self-joined:
+    // at most one direct scan in the query and in the edge set's build,
+    // and if the query has zero, the cached edge set must be what
+    // replaced it.
+    val query = finalPlan(SparkEntry.queries("q285_adamic_adar")(spark, sf))
+    def liScans(p: SparkPlan) = allNodes(p).collect {
       case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains("lineitem")) => f
     }
-    val cachedScans = nodes.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => m
-    }
-    assert(liScans.size <= 1,
-      s"q285 should scan lineitem at most once (basket expansion), got ${liScans.size}")
-    assert(liScans.nonEmpty || cachedScans.nonEmpty,
+    val direct = liScans(query)
+    val inBuild = liScans(finalPlan(operators.GraphOps.coorderPairsBuild(spark, sf)))
+    assert(direct.size <= 1,
+      s"q285 should scan lineitem at most once (basket expansion), got ${direct.size}")
+    assert(inBuild.size <= 1,
+      s"the co-order edge build should scan lineitem at most once, got ${inBuild.size}")
+    assert(direct.nonEmpty || cachedReads(query).nonEmpty,
       "q285 with zero direct lineitem scans must be reading the PlanCache'd edge set")
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Shared plan-inspection helpers for the spec suite. The QueryStageExec
@@ -18,6 +18,11 @@ object PlanTestUtils {
       case p => p
     }
   }
+
+  /** Scans of a materialized checkpoint — how a PlanCache entry is read
+    * in every plan that uses it. */
+  def cachedReads(p: SparkPlan): Seq[RDDScanExec] =
+    allNodes(p).collect { case r: RDDScanExec if r.rdd.isCheckpointed => r }
 
   /** Full traversal, descending through AQE query stages. */
   def allNodes(p: SparkPlan): Seq[SparkPlan] = {
